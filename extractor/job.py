@@ -58,6 +58,37 @@ DEFAULT_CONF = {
     "spark.sql.parquet.compression.codec": "zstd",
 }
 
+DRIVER_MEM_CAP = 16 * 2**30
+# cgroup v2 limit, then the v1 one; "max" (v2) or an absurdly large
+# number (v1) means unlimited and leaves physical RAM as the base
+CGROUP_MEM_LIMITS = ("/sys/fs/cgroup/memory.max",
+                     "/sys/fs/cgroup/memory/memory.limit_in_bytes")
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory`` for ``get_spark``: ``$SPARK_DRIVER_MEM``
+    verbatim when set, else half of the host's memory (physical RAM, or
+    the cgroup limit when that is smaller), capped at 16g.
+
+    In local mode the Python workers that run the Arrow/mapInPandas
+    stage live outside the JVM heap, so the heap must leave them (and
+    the OS) room: a heap ceiling above what the host has lets G1 grow
+    until the kernel OOM-kills the JVM."""
+    explicit = os.environ.get("SPARK_DRIVER_MEM")
+    if explicit:
+        return explicit
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in CGROUP_MEM_LIMITS:
+        try:
+            with open(path) as f:
+                total = min(total, int(f.read()))
+        except (OSError, ValueError):
+            pass
+    half = total // 2
+    if half >= DRIVER_MEM_CAP:
+        return "16g"
+    return "{}m".format(half // 2**20)
+
 
 def get_spark(app_name: str = "extractor", master: str | None = None,
               shuffle_partitions: int | None = None,
@@ -70,7 +101,7 @@ def get_spark(app_name: str = "extractor", master: str | None = None,
     ncores = 32 if master == "local[*]" else int(master.strip("local[]") or 32)
     b = b.config("spark.sql.shuffle.partitions",
                  str(shuffle_partitions or max(2 * ncores, 32)))
-    b = b.config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+    b = b.config("spark.driver.memory", driver_memory())
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

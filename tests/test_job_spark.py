@@ -919,3 +919,44 @@ def test_compact_twice_preserves_original_provenance(tmp_path):
     assert after[0]["compacted_from_run_id"] == "run-a"
     assert after[1]["compacted_from_run_id"] == "run-b"
     assert after[2]["compacted_from_run_id"] == "run-c"
+
+
+def _host(monkeypatch, tmp_path, ram_bytes, cgroup_limit=None):
+    """Pin what driver_memory sees: RAM via os.sysconf, the cgroup limit
+    via a temp file (or none), and SPARK_DRIVER_MEM unset."""
+    page = 4096
+    sysconf = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": ram_bytes // page}
+    monkeypatch.setattr(os, "sysconf", sysconf.__getitem__)
+    limit = tmp_path / "memory.max"
+    limit.unlink(missing_ok=True)
+    if cgroup_limit is not None:
+        limit.write_text("{}\n".format(cgroup_limit))
+    monkeypatch.setattr(job, "CGROUP_MEM_LIMITS", (str(limit),))
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+
+
+def _mem_bytes(spec):
+    return int(spec[:-1]) * {"m": 2**20, "g": 2**30}[spec[-1]]
+
+
+def test_driver_memory_sized_to_host(monkeypatch, tmp_path):
+    """The local driver heap takes at most half of the host, leaving the
+    rest to the out-of-heap Python workers and the OS; big hosts keep the
+    16g cap; an explicit SPARK_DRIVER_MEM wins. No JVM is started."""
+    gib = 2**30
+    _host(monkeypatch, tmp_path, 16 * gib)
+    assert 0 < _mem_bytes(job.driver_memory()) <= 8 * gib
+
+    _host(monkeypatch, tmp_path, 256 * gib)
+    assert job.driver_memory() == "16g"
+    _host(monkeypatch, tmp_path, 32 * gib)
+    assert job.driver_memory() == "16g"
+
+    # a smaller cgroup limit is the base; "max" means no limit
+    _host(monkeypatch, tmp_path, 256 * gib, cgroup_limit=4 * gib)
+    assert _mem_bytes(job.driver_memory()) <= 2 * gib
+    _host(monkeypatch, tmp_path, 256 * gib, cgroup_limit="max")
+    assert job.driver_memory() == "16g"
+
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "3g")
+    assert job.driver_memory() == "3g"
